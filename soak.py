@@ -2250,9 +2250,17 @@ def main() -> None:
     # Round 4: the end-to-end curation pipeline + health report soak
     # alongside the catalog (the curate chain includes the LSH ->
     # Jaccard -> star-CC fuzzy stage, the heaviest composed plan).
-    from bench import EXTRA
+    from travelpulse_spark_stream_tourism_analytics_spark.operators import curate
+    from travelpulse_spark_stream_tourism_analytics_spark.plans.catalog import (
+        load_table,
+    )
 
-    catalog.update(EXTRA)
+    catalog["curate_corpus_fuzzy"] = lambda s, d: curate.curate_corpus(
+        load_table(s, d, "documents").select("doc_id", "text"), fuzzy=True
+    )
+    catalog["corpus_report"] = lambda s, d: curate.corpus_report(
+        load_table(s, d, "documents")
+    )
 
     def timed(fn, sf_dir):
         """Materialize through the noop sink: full execution, no
@@ -2613,7 +2621,7 @@ def main() -> None:
     result["notes"] = [
         "round 8: the ANN sf1 full-probe plateau (r6 action item) is FIXED — the dominant term was PQ subspace width, not k-means quality (mse 0.307 regardless of init/iterations at m=8; 0.093 at m=16) nor rerank budget alone (recall climbed 0.89->1.0 only by rerank 200x k at m=8); build_ann_index now auto-sizes m to ~4-dim subspaces and the soak floors rose to full>=0.95 / half>=0.87. New season_livefire section: the full 16-query topology drains a 4-month simulated corpus at timewarp and the streamed two-phase season score must equal the batch recomputation with zero divergence at gauge rounding.",
         "round 6: the first SOAK_r6 run RECORDED an ann_recall:sf1 anomaly (recall@10 0.675 at half-width probing, 20k vectors) — diagnosis separated the probing ceiling (0.795: the FIXED 16-cell coarse quantizer was too coarse at 10x the corpus) from ADC-shortlist starvation; the fix is FAISS-style auto-sizing (n_cells = max(16, sqrt(N)), now the build_ann_index/--cells default) plus rerank 40x k, after which the half-width point measures 0.865 at sf1 / 0.965 at sf0.1. The kept ann_recall section is the post-fix re-run of the same harness.",
-        "round 6 totals are again not per-entry comparable to SOAK_r5: the same 50 catalog names run strictly more work (kcore_14 + hb_* HyperBall arms in nation_key_set_ops — fixed 25-node graph, so their cost is scale-invariant iterative overhead; Gopher repetition masses in docs_text_profile — two extra array_sort folds per document). graph_suite joins the EXTRA surfaces timed at both scales.",
+        "round 6 totals are again not per-entry comparable to SOAK_r5: the same 50 catalog names run strictly more work (kcore_14 + hb_* HyperBall arms in nation_key_set_ops — fixed 25-node graph, so their cost is scale-invariant iterative overhead; Gopher repetition masses in docs_text_profile — two extra array_sort folds per document).",
         "round 5 totals are again not per-entry comparable to SOAK_r4: the same 50 catalog names run strictly more work (new oracled branches: color_jpeg in multimodal_blob_pipeline, psi grains in event_time_profiles, cmsketch + bpe_pair in docs_top_terms, split_* in docs_dedup_clusters, pca2w in embedding_label_centroids, and the END-TO-END curated chain folded into docs_chunked). The curate_quality section records the fuzzy chain's kept-vs-dropped quality gap (per-cluster winner==max must have 0 violations; pooled means are informational — per-cluster argmax admits Simpson-style pooled inversions).",
         "late round-5 additions folded into the same entries: the fused graph arms (pagerank_multi global+TrustRank) in topn_revenue_entities, lpa_* community rows (3-round label propagation over the nation trade graph) in nation_key_set_ops, the zorder Morton-bucket rollup in orders_price_band_range_join, the MAD norm-outlier branch in embedding_label_centroids, and the es_sample Efraimidis-Spirakis weighted sample in docs_stratified_sample — each is one extra scan-plus-small-shuffle at its entry's scale.",
         "round 4 context: the same 50 catalog names ran strictly more work than r3 (pq_adc, pca2, tfidf+lm, multiprobe, tsmatch, ahash/jpeg rows), and two end-to-end entries were added (curate_corpus_fuzzy: the full redact->gate->dedup->LSH->star-CC->chunk->pack chain; corpus_report).",

@@ -3,6 +3,10 @@ depends on, pinned so a refactor cannot silently break them."""
 
 from __future__ import annotations
 
+import threading
+import time
+
+import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMOKE
@@ -58,16 +62,26 @@ def test_scalar_aggregate_arms_ride_in_nation_key_set_ops(spark):
 
 
 def test_branch_tagged_entries_expose_expected_branches(spark):
-    """Every branch/variant tag that bench.py times (and COVERAGE.md
-    documents) actually exists in the entry's output — renaming a
-    branch would otherwise silently turn its bench timing into an
-    empty-plan measurement."""
-    from bench import BRANCHES
-
+    """Every branch/variant tag of the merged entries below (COVERAGE.md
+    documents them) actually exists in the entry's output — renaming a
+    branch would otherwise silently drop it from the documented
+    surface."""
     import __spark_entry__ as E
 
+    branches = {
+        "embedding_knn_variants": (
+            "variant",
+            ["brute", "ivf_seeded", "int8_corpus", "semdedup", "pq_adc",
+             "knn_graph", "knn_graph_2l", "semantic_contam",
+             "filtered_pre", "filtered_post"],
+        ),
+        "latest_event_per_user": ("branch", ["latest", "tsmatch"]),
+        "docs_exact_dedup": (
+            "branch", ["doc", "substring", "despan", "despan_mask"]
+        ),
+    }
     q = E.queries()
-    for name, (col, tags) in BRANCHES.items():
+    for name, (col, tags) in branches.items():
         got = {
             r[col]
             for r in q[name](spark, SF_SMOKE).select(col).distinct().collect()
@@ -75,15 +89,32 @@ def test_branch_tagged_entries_expose_expected_branches(spark):
         assert set(tags) <= got, (name, got)
 
 
-def test_headline_entries_are_all_resolvable(spark):
-    """Every bench HEADLINE name resolves to a catalog entry or an
-    EXTRA surface and yields a non-degenerate DataFrame."""
-    from bench import EXTRA, HEADLINE
+def test_build_concurrently_raises_after_every_builder_finishes(spark):
+    """A failing builder surfaces as a RuntimeError naming the entry and
+    the failed key — but only once every other builder has finished,
+    so no arm is still running when the caller unwinds."""
+    from travelpulse_spark_stream_tourism_analytics_spark.plans.catalog import (
+        build_concurrently,
+    )
 
-    import __spark_entry__ as E
+    slow_done = threading.Event()
 
-    q = E.queries()
-    for name in HEADLINE:
-        fn = EXTRA.get(name) or q[name]
-        df = fn(spark, SF_SMOKE)
-        assert len(df.columns) > 0
+    def slow():
+        time.sleep(0.5)
+        slow_done.set()
+        return "slow"
+
+    def bad():
+        raise ValueError("boom")
+
+    with pytest.raises(RuntimeError) as info:
+        build_concurrently("some_entry", {"slow": slow, "bad": bad})
+    assert slow_done.is_set()
+    msg = str(info.value)
+    assert "some_entry" in msg and "bad" in msg and "slow" not in msg
+    assert isinstance(info.value.__cause__, ValueError)
+
+    assert build_concurrently("some_entry", {"a": lambda: 1, "b": slow}) == {
+        "a": 1,
+        "b": "slow",
+    }

@@ -11,11 +11,11 @@ cluster pipeline would do to parquet — but a bare ``persist`` with no
 
 ``scoped_persist`` bounds that: each call SITE keeps at most one live
 cached lineage — re-invoking the operator unpersists the previous
-one — and ``clear_operator_caches()`` releases everything (bench.py
-additionally calls ``spark.catalog.clearCache()`` between queries).
+one — and ``clear_operator_caches()`` releases everything.
 
 Several plan builders now persist from concurrent driver threads
-(graph_suite / docs_top_terms / knn arm builders), so ``_LIVE`` is
+(the ``build_concurrently`` arms of nation_key_set_ops /
+docs_top_terms / embedding_knn_variants), so ``_LIVE`` is
 guarded by a lock and each site records its owning thread: re-
 persisting a site that a DIFFERENT, still-running worker thread owns
 would race ``unpersist(blocking=True)`` against that thread's reads

@@ -117,6 +117,50 @@ def repair_coarse_scan(spark, df, path: str, min_rows: int = 90_000):
     return df
 
 
+def build_concurrently(
+    entry: str, builders: dict[str, Callable[[], object]]
+) -> dict[str, object]:
+    """Run each builder on its own ``InheritableThread``; return
+    ``{key: result}``.
+
+    For entries whose branch constructors run eager driver-side jobs at
+    BUILD time (collects, per-round localCheckpoints): serially those
+    jobs leave the cluster mostly idle, overlapped they share it. Each
+    builder must own its cache sites; the caller assembles the results
+    in a fixed order, so output is identical to a serial build.
+
+    Every thread is joined before a failure surfaces, so no builder is
+    still running when the caller unwinds. The ``RuntimeError`` names
+    the entry and every failed key and chains the first error; only
+    ``Exception`` is caught, so KeyboardInterrupt/SystemExit propagate.
+    """
+    from pyspark import InheritableThread
+
+    built: dict[str, object] = {}
+    errors: dict[str, Exception] = {}
+
+    def run(key: str, fn: Callable[[], object]) -> None:
+        try:
+            built[key] = fn()
+        except Exception as exc:
+            errors[key] = exc
+
+    threads = [
+        InheritableThread(target=run, args=(key, fn))
+        for key, fn in builders.items()
+    ]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    if errors:
+        raise RuntimeError(
+            f"{entry}: build failed: "
+            + "; ".join(f"{k}: {e!r}" for k, e in errors.items())
+        ) from next(iter(errors.values()))
+    return built
+
+
 _REGISTERED = False
 
 

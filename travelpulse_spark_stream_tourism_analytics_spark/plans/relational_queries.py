@@ -22,6 +22,7 @@ from travelpulse_spark_stream_tourism_analytics_spark.functions.numeric import (
     money_sum,
 )
 from travelpulse_spark_stream_tourism_analytics_spark.plans.catalog import (
+    build_concurrently,
     load_table,
     query,
 )
@@ -698,27 +699,8 @@ def _purchase_graph_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def supplier_customer_pagerank(
-    spark: SparkSession, sf_dir: str, iterations: int = 4
-) -> DataFrame:
-    """Weighted PageRank over the bipartite customer<->supplier purchase
-    graph. The relational stand-in for the link-centrality
-    quality signal a web-corpus curation pipeline computes over its
-    hyperlink graph — same operator (operators/graph.py pagerank), same
-    plan shape at 100 TB: edge build is one join + one partial-agg
-    shuffle, then each iteration re-uses the cached pre-partitioned edge
-    relation."""
-    from travelpulse_spark_stream_tourism_analytics_spark.operators.graph import (
-        pagerank,
-    )
-
-    return pagerank(
-        _purchase_graph_edges(spark, sf_dir), iterations=iterations
-    )
-
-
 def _pagerank_ctes(iters: int = 4) -> str:
-    """Unrolled-iteration SQL twin of supplier_customer_pagerank.
+    """Unrolled-iteration SQL twin of graph_rank_entities' PageRank arm.
 
     Float-exactness contract (operators/graph.py module docstring): the
     per-node contribution sum goes through DECIMAL(38,18) on both
@@ -786,25 +768,6 @@ def _trusted_supplier_seeds(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def supplier_customer_trustrank(
-    spark: SparkSession, sf_dir: str, iterations: int = 4
-) -> DataFrame:
-    """TrustRank over the same purchase graph: teleport restricted to
-    the top-5 suppliers by account balance (the 'trusted seed' set) —
-    rank then measures trust flowing out of those seeds through shared
-    customers, the seed-propagation quality signal web curation runs
-    over its hyperlink graph (Gyöngyi et al. 2004)."""
-    from travelpulse_spark_stream_tourism_analytics_spark.operators.graph import (
-        pagerank,
-    )
-
-    return pagerank(
-        _purchase_graph_edges(spark, sf_dir), iterations=iterations,
-        seeds=_trusted_supplier_seeds(spark, sf_dir),
-        cache_site="graph.trustrank.edges",
-    )
-
-
 def _truncate_lineage(df: DataFrame) -> DataFrame:
     """Arm-boundary lineage truncation (round 11, VERDICT r10 item 4):
     the iterative arms' results are tiny (O(|V|) rows) but their lazy
@@ -835,8 +798,8 @@ def supplier_customer_rank_variants(
     (``rank_pr``, ``rank_tr``).
 
     The tiny (node, 2 doubles) result is returned LINEAGE-TRUNCATED
-    (round 11): both catalog arms plus graph_suite's two component
-    arms re-inlined the full 4-iteration tree otherwise (and the old
+    (round 11): both graph_rank_entities arms re-inlined the full
+    4-iteration tree otherwise (and the old
     scoped_persist + caller count() pattern was fragile — another call
     to this constructor before execution evicted the site, silently
     discarding the materialization; ADVICE r10 item 4)."""
@@ -964,12 +927,35 @@ def topn_revenue_entities(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast dims + T1 TakeOrderedAndProject, reference
     spark/kafka_to_metrics.py:396-400), TPC-H Q3 shipping priority
     (pushed filters on all three scans, top-10), keep-best-per-group
-    dedup (T2, scripts/clean_cities_geonames.py:89-90). The fused
-    PageRank/TrustRank arms that rode here through rounds 6-7 moved to
-    their own catalog entry ``graph_rank_entities`` (VERDICT r7 item 4:
-    they made the bench headline double-count ~8 s of graph work that
-    ``graph_suite`` times separately)."""
-    return topn_revenue_entities_base(spark, sf_dir)
+    dedup (T2, scripts/clean_cities_geonames.py:89-90)."""
+    top = top_revenue_customers(spark, sf_dir).select(
+        F.lit("top_customer_revenue").alias("scope"),
+        F.col("c_custkey").alias("entity_key"),
+        F.col("c_name").alias("label_a"),
+        F.col("n_name").alias("label_b"),
+        F.col("revenue").alias("metric_value"),
+        "n_orders",
+        F.lit(None).cast("timestamp_ntz").alias("ref_date"),
+    )
+    shp = shipping_priority(spark, sf_dir).select(
+        F.lit("shipping_priority").alias("scope"),
+        F.col("l_orderkey").alias("entity_key"),
+        F.col("o_orderpriority").alias("label_a"),
+        F.lit(None).cast("string").alias("label_b"),
+        F.col("revenue").alias("metric_value"),
+        F.lit(None).cast("long").alias("n_orders"),
+        F.col("o_orderdate").alias("ref_date"),
+    )
+    best = best_supplier_per_nation(spark, sf_dir).select(
+        F.lit("best_supplier_per_nation").alias("scope"),
+        F.col("s_suppkey").alias("entity_key"),
+        F.col("s_name").alias("label_a"),
+        F.col("s_nationkey").cast("string").alias("label_b"),
+        F.col("s_acctbal").alias("metric_value"),
+        F.lit(None).cast("long").alias("n_orders"),
+        F.lit(None).cast("timestamp_ntz").alias("ref_date"),
+    )
+    return top.unionByName(shp).unionByName(best)
 
 
 @query(
@@ -1003,12 +989,10 @@ def graph_rank_entities(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-50 purchase-graph nodes by fused PageRank and TrustRank
     (dangling-mass redistribution; TrustRank personalized on the 5
     highest-acctbal suppliers) — its own driver-oracled entry since
-    round 8 so the bench headline stays additive: the rank variants
-    are timed once, under ``graph_suite``. One ``pagerank_multi`` pass
-    computes BOTH columns (operators/graph.py) — one join + one
-    map-side-combined shuffle per iteration, shared across the two
-    output arms via the scoped persist in
-    ``supplier_customer_rank_variants``."""
+    round 8. One ``pagerank_multi`` pass computes BOTH columns
+    (operators/graph.py) — one join + one map-side-combined shuffle per
+    iteration, shared across the two output arms through the eager
+    ``localCheckpoint`` in ``supplier_customer_rank_variants``."""
     # supplier_customer_rank_variants returns the fused ranks already
     # MATERIALIZED behind an eager localCheckpoint (round 11): the two
     # top-50 arms read a LogicalRDD instead of re-inlining the
@@ -1041,42 +1025,6 @@ def graph_rank_entities(spark: SparkSession, sf_dir: str) -> DataFrame:
     return rank_arm("rank_pr", "graph_pagerank").unionByName(
         rank_arm("rank_tr", "graph_trustrank")
     )
-
-
-def topn_revenue_entities_base(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The round-4 composition of topn_revenue_entities (no graph
-    arms): top-20 customers + Q3 shipping priority + keep-best
-    supplier. Kept as a named function so bench.py can trend the
-    relational entry's cost round-over-round independently of the
-    graph suite (VERDICT r5 nit 2)."""
-    top = top_revenue_customers(spark, sf_dir).select(
-        F.lit("top_customer_revenue").alias("scope"),
-        F.col("c_custkey").alias("entity_key"),
-        F.col("c_name").alias("label_a"),
-        F.col("n_name").alias("label_b"),
-        F.col("revenue").alias("metric_value"),
-        "n_orders",
-        F.lit(None).cast("timestamp_ntz").alias("ref_date"),
-    )
-    shp = shipping_priority(spark, sf_dir).select(
-        F.lit("shipping_priority").alias("scope"),
-        F.col("l_orderkey").alias("entity_key"),
-        F.col("o_orderpriority").alias("label_a"),
-        F.lit(None).cast("string").alias("label_b"),
-        F.col("revenue").alias("metric_value"),
-        F.lit(None).cast("long").alias("n_orders"),
-        F.col("o_orderdate").alias("ref_date"),
-    )
-    best = best_supplier_per_nation(spark, sf_dir).select(
-        F.lit("best_supplier_per_nation").alias("scope"),
-        F.col("s_suppkey").alias("entity_key"),
-        F.col("s_name").alias("label_a"),
-        F.col("s_nationkey").cast("string").alias("label_b"),
-        F.col("s_acctbal").alias("metric_value"),
-        F.lit(None).cast("long").alias("n_orders"),
-        F.lit(None).cast("timestamp_ntz").alias("ref_date"),
-    )
-    return top.unionByName(shp).unionByName(best)
 
 
 @query(
@@ -1206,7 +1154,7 @@ def order_status_reshape(spark: SparkSession, sf_dir: str) -> DataFrame:
     return order_status_unpivot(spark, sf_dir)
 
 
-def _nation_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Directed nation trade graph: (src=customer nation, dst=supplier
     nation, w=lineitem count), scope-persisted. The four iterative
     graph arms (LPA, triangles, kcore, HyperBall) run eager per-round
@@ -1249,191 +1197,6 @@ def _median_thresholded(trade: DataFrame) -> DataFrame:
         .filter(F.col("w").cast("double") > F.col("__med"))
         .select("src", "dst")
     )
-
-
-def nation_trade_triangles(
-    spark: SparkSession, sf_dir: str, trade: DataFrame | None = None
-) -> DataFrame:
-    """Bench constituent: exact triangle counts on the nation trade
-    graph (the tri_* arms of nation_key_set_ops). Pass ``trade`` to
-    share one persisted edge relation across arms (graph_suite /
-    nation_key_set_ops do) — each bare call rebuilds and re-persists
-    it, evicting the site's previous cache."""
-    from travelpulse_spark_stream_tourism_analytics_spark.operators.graph import (
-        triangle_counts,
-    )
-
-    if trade is None:
-        trade = _nation_trade_graph(spark, sf_dir)
-    return triangle_counts(trade)
-
-
-def nation_trade_lpa(
-    spark: SparkSession, sf_dir: str, trade: DataFrame | None = None
-) -> DataFrame:
-    """Bench constituent: 3-round label propagation on the nation trade
-    graph (the lpa_* arms of nation_key_set_ops)."""
-    from travelpulse_spark_stream_tourism_analytics_spark.operators.graph import (
-        label_propagation,
-        undirect,
-    )
-
-    if trade is None:
-        trade = _nation_trade_graph(spark, sf_dir)
-    return label_propagation(undirect(trade), iterations=3)
-
-
-def nation_trade_kcore(
-    spark: SparkSession, sf_dir: str, trade: DataFrame | None = None
-) -> DataFrame:
-    """Bench constituent: 14-core of the median-thresholded trade graph
-    (the kcore_14 arm of nation_key_set_ops)."""
-    from travelpulse_spark_stream_tourism_analytics_spark.operators.graph import (
-        kcore,
-    )
-
-    if trade is None:
-        trade = _nation_trade_graph(spark, sf_dir)
-    return kcore(_median_thresholded(trade), k=14)
-
-
-def nation_trade_hyperball(
-    spark: SparkSession, sf_dir: str, trade: DataFrame | None = None
-) -> DataFrame:
-    """Bench constituent: HyperBall harmonic in-centrality on the
-    median-thresholded trade graph (the hb_* arms of
-    nation_key_set_ops)."""
-    from travelpulse_spark_stream_tourism_analytics_spark.operators.graph import (
-        hyperball,
-    )
-
-    if trade is None:
-        trade = _nation_trade_graph(spark, sf_dir)
-    return hyperball(_median_thresholded(trade), max_t=3)
-
-
-def graph_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bench headline entry for the whole graph suite: the fused
-    PageRank+TrustRank power iteration over the purchase graph plus the
-    four nation-trade-graph arms (triangles, LPA, kcore, HyperBall) —
-    timed as ONE entry so BENCH_r{N} trends the iterative-graph cost
-    independently of the relational entries (VERDICT r5 nit 2).
-    Output is a uniform (component, node, metric) catalog.
-
-    The trade graph is built ONCE and passed into every arm — calling
-    the arm wrappers bare would re-persist the same scoped cache site
-    four times, evicting each previous arm's cache and re-deriving the
-    4-table join per arm (round-6 review finding).
-
-    The five arm CONSTRUCTIONS overlap on driver threads (round 10,
-    guide §2.6 "overlap independent jobs"): the iterative arms (fused
-    ranks, LPA, kcore, HyperBall) each run eager per-round jobs
-    (localCheckpoint / seed-count collects) during DataFrame BUILD,
-    and serially those jobs leave most of the cluster idle — measured
-    at sf0.1 the serial build phase was 9-10 s against a ~5 s critical
-    path (the fused power iteration). The shared trade-graph cache is
-    materialized BEFORE the threads start so concurrent arms read the
-    cache instead of racing to compute it; each arm touches only its
-    own scoped_persist sites; per-arm results are deterministic and
-    the union order is fixed, so output is bit-identical to the serial
-    build (the arm outputs are the same DataFrames either way)."""
-    from pyspark import InheritableThread
-    from travelpulse_spark_stream_tourism_analytics_spark.operators.graph import (
-        triangle_counts,
-    )
-
-    built: dict[str, DataFrame] = {}
-    errors: dict[str, Exception] = {}
-
-    def _build(key, fn):
-        try:
-            built[key] = fn()
-        except Exception as e:  # surface on the caller thread;
-            # KeyboardInterrupt/SystemExit propagate (ADVICE r10)
-            errors[key] = e
-
-    # The fused power iteration is the build's CRITICAL PATH and does
-    # not read the nation-trade graph — start its thread BEFORE the
-    # trade-cache barrier so the barrier's materialization job
-    # overlaps the first rank iterations instead of preceding them.
-    fused_t = InheritableThread(
-        target=_build,
-        args=("fused", lambda: supplier_customer_rank_variants(spark, sf_dir)),
-    )
-    fused_t.start()
-
-    trade = _nation_trade_graph(spark, sf_dir)
-    # count() on the PERSISTED trade relation materializes the full
-    # cache (the honest barrier — un-persisted counts prune columns),
-    # so the concurrent arms below never race to build it.
-    trade.count()
-
-    # triangles is lineage-truncated at the arm boundary (round 11):
-    # its plan otherwise re-inlines the oriented-edge cache (and the
-    # trade lineage under it) three times into the union; the eager
-    # checkpoint also moves its three shuffles into the threaded build
-    # where they overlap the other arms' per-round jobs. Per-caller
-    # cache_site: a concurrent triangle build elsewhere must not share
-    # the oriented-edge site (ADVICE r10 item 2).
-    builders = {
-        "triangles": lambda: _truncate_lineage(
-            triangle_counts(trade, cache_site="graph.triangles.suite")
-        ),
-        "lpa": lambda: nation_trade_lpa(spark, sf_dir, trade),
-        "kcore": lambda: nation_trade_kcore(spark, sf_dir, trade),
-        "hyperball": lambda: nation_trade_hyperball(spark, sf_dir, trade),
-    }
-    threads = [fused_t] + [
-        InheritableThread(target=_build, args=(k, fn))
-        for k, fn in builders.items()
-    ]
-    for t in threads[1:]:
-        t.start()
-    for t in threads:
-        t.join()
-    if errors:
-        raise RuntimeError(
-            "graph_suite: arm build failed: "
-            + "; ".join(f"{k}: {e!r}" for k, e in errors.items())
-        ) from next(iter(errors.values()))
-
-    fused = built["fused"]
-    parts = [
-        fused.select(
-            F.lit("pagerank").alias("component"),
-            F.col("node"),
-            F.col("rank_pr").alias("metric"),
-        ),
-        fused.select(
-            F.lit("trustrank").alias("component"),
-            "node",
-            F.col("rank_tr").alias("metric"),
-        ),
-        built["triangles"].select(
-            F.lit("triangles").alias("component"),
-            "node",
-            F.col("n_triangles").cast("double").alias("metric"),
-        ),
-        built["lpa"].select(
-            F.lit("lpa").alias("component"),
-            "node",
-            F.col("label").cast("double").alias("metric"),
-        ),
-        built["kcore"].select(
-            F.lit("kcore14").alias("component"),
-            "node",
-            F.lit(1.0).alias("metric"),
-        ),
-        built["hyperball"].select(
-            F.lit("hyperball").alias("component"),
-            "node",
-            F.col("harmonic").alias("metric"),
-        ),
-    ]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
 
 
 def _nation_lpa_ctes(iters: int = 3) -> str:
@@ -1723,37 +1486,30 @@ def nation_key_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # The iterative graph arms (LPA, kcore, HyperBall) run eager
     # per-round localCheckpoint jobs at BUILD time; serially those
-    # jobs leave the cluster mostly idle (round 10, guide §2.6 —
-    # the graph_suite pattern). Materialize the shared trade cache
-    # first (the honest full-cache barrier: un-persisted counts prune
-    # columns) so concurrent arms read it instead of racing to
-    # compute it, then overlap the arm builds on InheritableThreads.
-    # Each arm touches only its own checkpoint/persist sites; the
-    # assembly and union order below are unchanged, so output is
+    # jobs leave the cluster mostly idle (round 10, guide §2.6).
+    # Materialize the shared trade cache first (the honest full-cache
+    # barrier: un-persisted counts prune columns) so concurrent arms
+    # read it instead of racing to compute it, then overlap the arm
+    # builds. Each arm touches only its own checkpoint/persist sites;
+    # the assembly and union order below are unchanged, so output is
     # bit-identical to the serial build (driver-oracled).
-    from pyspark import InheritableThread
     from travelpulse_spark_stream_tourism_analytics_spark.operators.graph import (
         hyperball,
         kcore,
         triangle_counts,
     )
 
-    trade = _nation_trade_graph(spark, sf_dir)
+    trade = _trade_graph(spark, sf_dir)
     trade.count()
     thr = _median_thresholded(trade)
 
-    built: dict[str, DataFrame] = {}
-    errors: dict[str, Exception] = {}
-
-    def _build(key, fn):
-        try:
-            built[key] = fn()
-        except Exception as exc:  # surface on the caller thread;
-            # KeyboardInterrupt/SystemExit propagate (ADVICE r10)
-            errors[key] = exc
-
-    # triangles: lineage-truncated + per-caller oriented-edge cache
-    # site, same rationale as graph_suite (round 11).
+    # triangles is lineage-truncated at the arm boundary (round 11):
+    # its plan otherwise re-inlines the oriented-edge cache (and the
+    # trade lineage under it) three times into the union; the eager
+    # checkpoint also moves its three shuffles into the concurrent
+    # build. Per-caller cache_site: a concurrent triangle build
+    # elsewhere must not share the oriented-edge site (ADVICE r10
+    # item 2).
     builders = {
         "lpa": lambda: label_propagation(undirect(trade), iterations=3),
         "triangles": lambda: _truncate_lineage(
@@ -1762,19 +1518,7 @@ def nation_key_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
         "kcore": lambda: kcore(thr, k=14),
         "hyperball": lambda: hyperball(thr, max_t=3),
     }
-    threads = [
-        InheritableThread(target=_build, args=(k, fn))
-        for k, fn in builders.items()
-    ]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join()
-    if errors:
-        raise RuntimeError(
-            "nation_key_set_ops: arm build failed: "
-            + "; ".join(f"{k}: {e!r}" for k, e in errors.items())
-        ) from next(iter(errors.values()))
+    built = build_concurrently("nation_key_set_ops", builders)
 
     communities = built["lpa"].select(
         F.concat(F.lit("lpa_"), F.col("label")).alias("set_op"),
